@@ -14,7 +14,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import ArrayType, DataType, LongType, MapType, StructField, StructType
 
 TABLE_NAMES = (
     "region",
@@ -28,8 +33,6 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def scratch_base() -> str:
@@ -94,9 +97,9 @@ def build_session(app_name: str = "presto_weather_spark", cpus: int | None = Non
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects; read as long and convert in load_table (exact
-        # integer division — going through double would lose precision).
+        # A source table may carry TIMESTAMP(NANOS), which Spark's reader
+        # rejects; read_parquet_table reads it as long and converts it by
+        # exact integer division (going through double would lose precision).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     spark = builder.getOrCreate()
@@ -105,104 +108,82 @@ def build_session(app_name: str = "presto_weather_spark", cpus: int | None = Non
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan — Catalyst pushes filters/pruning into it.
+    """Columnar scan of the source table ``name`` under ``sf_dir``;
+    Catalyst pushes filters and column pruning into it.
 
-    Robust to both timestamp encodings the driver has shipped:
+    One path, ``read_parquet_table``: the schema comes from the parquet
+    footer, so the read launches no Spark job. TIMESTAMP(NANOS) columns
+    are truncated exactly to microseconds. Naive (NTZ) timestamps are
+    declared TIMESTAMP, which reads them as naive UTC only when the session
+    timezone is UTC: ``build_session`` sets it, and a caller passing its
+    own session must set it too."""
+    return read_parquet_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_parquet_table(
+    spark: SparkSession, path: str, stream_dir: str | None = None
+) -> DataFrame:
+    """The one way a parquet table is read, as a batch frame or, over the
+    staged ``stream_dir``, as a file-source stream.
+
+    The schema comes from the table's own footer (``footer_schema``) and is
+    passed through ``.schema(...)``, so no read runs Spark's per-read
+    schema-inference job. A missing or unreadable footer raises pyarrow's
+    error, which names the path. Every timestamp column arrives as plain
+    TIMESTAMP:
 
     - TIMESTAMP(NANOS), which Spark's reader rejects outright
-      (PARQUET_TYPE_ILLEGAL) unless ``nanosAsLong`` is set — sniffed from
-      the parquet footer (metadata-only, O(1) regardless of data size) and
-      the conf is flipped ONLY when ns columns are actually present.  It is
-      deliberately not restored afterwards: Spark re-reads it at physical
-      planning of every action on the returned frame, so restoring here
-      would break the scan later.  Micros-encoded reads never touch it.
-    - TIMESTAMP(MICROS, isAdjustedToUTC=false) — Spark 4 infers
-      TIMESTAMP_NTZ; ``_normalize_nanos`` casts it to TIMESTAMP under the
-      UTC session timezone, matching DuckDB's naive-UTC semantics.
-
-    The driver harness hands us a vanilla SparkSession, so all of this
-    happens at read time, not only in build_session.
+      (PARQUET_TYPE_ILLEGAL), is declared long under ``nanosAsLong`` and
+      truncated to microseconds by exact integer ``DIV 1000``, matching
+      DuckDB's ns->us cast. The conf is set only when the footer has such
+      columns, and deliberately not restored: Spark re-reads it at physical
+      planning of every action on the returned frame. Callers of the query
+      contract may pass a vanilla SparkSession, so this happens at read
+      time, not only in ``build_session``.
+    - TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark would infer as
+      TIMESTAMP_NTZ, is declared TIMESTAMP. Spark reads the stored value
+      unshifted, so this equals the naive-UTC reading DuckDB uses only
+      under a UTC session timezone.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos_cols = _prepare_parquet_read(spark, path)
-    df = spark.read.parquet(path)
-    return _normalize_nanos(df, nanos_cols)
-
-
-def _prepare_parquet_read(spark: SparkSession, path: str) -> set[str] | None:
-    """Footer-sniff ``path`` for TIMESTAMP(NANOS) columns and flip the
-    nanosAsLong conf when (and only when) needed; returns the sniffed set
-    (None = footer unreadable, caller falls back to the `ts`-name
-    heuristic).  Shared by the batch and streaming read paths."""
-    nanos_cols = _nanos_columns(path)
-    if nanos_cols is None:
-        # Footer sniff works on local paths only (pyarrow, no Hadoop FS) —
-        # on remote storage fall back to the conservative path: set the
-        # conf and treat a bigint `ts` as nanos.
-        import warnings
-
-        warnings.warn(
-            f"could not sniff parquet footer of {path}; "
-            "falling back to name-based nanos heuristic",
-            stacklevel=2,
-        )
-    if nanos_cols is None or nanos_cols:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # static/removed conf — read fails loudly if truly needed
-    return nanos_cols
-
-
-def _nanos_columns(path: str) -> set[str] | None:
-    """Column names stored as TIMESTAMP(NANOS) — from the footer only.
-    Returns None when the footer could not be inspected (caller falls back
-    to a name-based heuristic)."""
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        try:
-            schema = pq.read_schema(path)
-        except Exception:
-            schema = pq.ParquetDataset(path).schema
-        return {
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        }
-    except Exception:
-        return None
-
-
-def _normalize_nanos(df: DataFrame, nanos_cols: set[str] | None) -> DataFrame:
-    """Normalize every timestamp encoding to plain TIMESTAMP:
-
-    - TIMESTAMP(NANOS) columns arrive as long under nanosAsLong; truncate
-      to microseconds exactly (integer DIV) — matching DuckDB's ns->us cast.
-    - TIMESTAMP(MICROS, isAdjustedToUTC=false) arrives as TIMESTAMP_NTZ;
-      cast to TIMESTAMP (session tz is UTC, so the wall-clock value is
-      preserved — the same naive-UTC reading DuckDB uses).
-    """
-    from pyspark.sql import functions as F
-
-    for field in df.schema.fields:
-        kind = field.dataType.simpleString()
-        if kind == "timestamp_ntz":
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-        elif kind == "bigint" and (
-            (nanos_cols is not None and field.name in nanos_cols)
-            or (nanos_cols is None and field.name == "ts")
-        ):
-            df = df.withColumn(
-                field.name,
-                F.timestamp_micros(F.expr(f"`{field.name}` DIV 1000")),
-            )
+    schema, nanos = footer_schema(path)
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.readStream if stream_dir else spark.read
+    df = reader.schema(schema).parquet(stream_dir or path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+def footer_schema(path: str) -> tuple[StructType, list[str]]:
+    """The schema Spark's file source infers for the parquet table at
+    ``path`` (a bare file or a directory of part files) when naive
+    timestamps are read as TIMESTAMP (see ``read_parquet_table``), taken
+    from the footer alone; returns it with the TIMESTAMP(NANOS) column
+    names.
+
+    Every field is nullable, as Spark makes it. Nanosecond timestamps map
+    to long, and INT96 (Spark's own timestamp encoding) to TIMESTAMP."""
+    footer = pq.ParquetDataset(path, coerce_int96_timestamp_unit="us").schema
+    nanos = [
+        f.name for f in footer if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    fields = [
+        StructField(f.name, LongType() if f.name in nanos else _nullable(f.dataType))
+        for f in from_arrow_schema(footer)
+    ]
+    return StructType(fields), nanos
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every nested field, element and map value nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

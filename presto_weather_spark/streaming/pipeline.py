@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from presto_weather_spark.registry import register
 from presto_weather_spark.operators._util import scratch_root
-from presto_weather_spark.session import load_table
+from presto_weather_spark.session import load_table, read_parquet_table
 
 WINDOW_SECONDS = 6 * 3600  # 6-hour tumbling windows over the events fixture
 
@@ -47,7 +47,13 @@ def _stage_stream_dir(path: str) -> str:
     (the read-only testdata layout) symlinks as itself; a directory
     symlinks each of its part files. The stage name folds in the part-file
     listing, so a rewritten table (new part names) gets a fresh stage
-    instead of dangling stale links."""
+    instead of dangling stale links.
+
+    Single-process assumption: the stage lives under this process's
+    ``scratch_root()``, so its path is not stable across processes. That is
+    safe while every stream checkpoint is a per-run location; a checkpoint
+    reused by another process would hold file-source offsets naming a
+    staged path that no longer exists."""
     import hashlib
 
     if os.path.isdir(path):
@@ -71,15 +77,16 @@ def _stage_stream_dir(path: str) -> str:
     return stage
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema from batch read)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    from presto_weather_spark.session import _normalize_nanos, _prepare_parquet_read
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over the source table ``name``: staged for the
+    file source, with the batch read's footer-derived schema."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return read_parquet_table(spark, path, stream_dir=_stage_stream_dir(path))
 
-    stage = _stage_stream_dir(path)
-    nanos_cols = _prepare_parquet_read(spark, path)
-    schema = spark.read.parquet(path).schema  # raw on-disk schema (long/NTZ)
-    return _normalize_nanos(spark.readStream.schema(schema).parquet(stage), nanos_cols)
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events table."""
+    return _table_stream(spark, sf_dir, "events")
 
 
 STREAM_STATE_PARTITIONS = "4"  # state stores per stateful operator in tests
@@ -966,11 +973,8 @@ def s14o_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (schema from batch)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    stage = _stage_stream_dir(path)
-    schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stage)
+    """File-source stream over the documents table."""
+    return _table_stream(spark, sf_dir, "documents")
 
 
 def _aes_sample_key(doc_id: int, text: str, n_chars: int) -> float:

@@ -25,14 +25,21 @@ n = df.count()
 print(f"entry(): {n} rows, schema: {[f.name for f in df.schema.fields]}")
 assert n > 0
 
-# 1b. smoke: the streaming source on a vanilla session — catches signature
+# 1b. smoke: the streaming sources on a vanilla session — catches signature
 # or schema drift in the s14* path up front, before the 3-minute query loop.
-from presto_weather_spark.streaming.pipeline import events_stream
+from presto_weather_spark.session import load_table
+from presto_weather_spark.streaming.pipeline import documents_stream, events_stream
 sdf_stream = events_stream(spark, SF)
 assert sdf_stream.isStreaming, "events_stream must return a streaming frame"
 ts_type = dict((f.name, f.dataType.simpleString()) for f in sdf_stream.schema.fields)["ts"]
 assert ts_type == "timestamp", f"events_stream ts must normalize to timestamp, got {ts_type}"
 print(f"events_stream(): streaming schema ok (ts={ts_type})")
+sdf_docs = documents_stream(spark, SF)
+assert sdf_docs.isStreaming, "documents_stream must return a streaming frame"
+assert sdf_docs.schema == load_table(spark, SF, "documents").schema, (
+    f"documents_stream schema drifted from the batch read: {sdf_docs.schema.simpleString()}"
+)
+print(f"documents_stream(): streaming schema ok ({sdf_docs.schema.simpleString()})")
 
 qs = entry_mod.queries()
 oracles = entry_mod.oracle_sql()
